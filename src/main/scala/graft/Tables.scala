@@ -62,14 +62,17 @@ object Tables {
     * `createOrReplaceTempView` with the identical frame on every query
     * build is catalog-metadata churn the SQL-surface queries paid per
     * call. The memo records WHAT was registered (dir + tag); a different
-    * dir or tag under the same name re-registers, identical registration
-    * is a no-op. Metadata only — a view holds an unexecuted plan. */
+    * dir or tag under the same name re-registers, and so does a view that
+    * has since left the session catalog (dropped by a caller); identical
+    * registration of a live view is a no-op. Metadata only — a view holds
+    * an unexecuted plan. */
   private val viewReg = scala.collection.concurrent.TrieMap
     .empty[(String, String), (String, String)]
 
   def registerViewOnce(spark: SparkSession, dir: String, name: String,
       tag: String = "")(frame: => DataFrame): Unit =
-    if (!viewReg.get((sid(spark), name)).contains((dir, tag))) {
+    if (!viewReg.get((sid(spark), name)).contains((dir, tag)) ||
+        spark.sessionState.catalog.getTempView(name).isEmpty) {
       frame.createOrReplaceTempView(name)
       viewReg((sid(spark), name)) = (dir, tag)
     }

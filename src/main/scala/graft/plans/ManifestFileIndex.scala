@@ -27,7 +27,8 @@ import graft.storage.Segments
   * Filter translation is conservative (tri-state RSValue semantics): any
   * expression shape we do not recognize simply prunes nothing.
   */
-class ManifestFileIndex(spark: SparkSession, dir: String) extends FileIndex {
+class ManifestFileIndex private (spark: SparkSession, dir: String,
+    opened: Segments.TableManifest) extends FileIndex {
 
   /** observability: how many files the last listFiles call kept (tests/UI). */
   @volatile var lastKept: Int = -1
@@ -47,7 +48,7 @@ class ManifestFileIndex(spark: SparkSession, dir: String) extends FileIndex {
 
   private def normalize(p: String): String = new Path(p).toUri.getPath
 
-  private var manifest: Seq[Segments.FileStats] = Segments.readManifest(dir)
+  private var manifest: Seq[Segments.FileStats] = opened.files
 
   private def listStatuses(): Map[String, FileStatus] = {
     val path = new Path(dir)
@@ -62,7 +63,7 @@ class ManifestFileIndex(spark: SparkSession, dir: String) extends FileIndex {
   override def sizeInBytes: Long = statuses.values.map(_.getLen).sum
   override def inputFiles: Array[String] = statuses.keys.toArray
   override def refresh(): Unit = {
-    manifest = Segments.readManifest(dir)
+    manifest = Segments.openManifest(dir).files
     statuses = listStatuses()
   }
 
@@ -183,23 +184,30 @@ object ManifestFileIndex {
     * skip whole files inside the scan node. */
   def read(spark: SparkSession, dir: String): DataFrame = readWithIndex(spark, dir)._1
 
-  /** As `read`, also returning the index for pruning introspection. The
-    * file format (parquet/orc) comes from the manifest. */
+  /** As `read`, also returning the index for pruning introspection. */
   def readWithIndex(spark: SparkSession, dir: String): (DataFrame, ManifestFileIndex) = {
-    val fmt = Segments.manifestFormat(dir)
-    val fileFormat = fmt match {
+    val rel = relation(spark, dir)
+    (Bridge.ofRows(spark, LogicalRelation(rel, isStreaming = false)),
+      rel.location.asInstanceOf[ManifestFileIndex])
+  }
+
+  /** The manifest-backed relation of a segmented table — the one builder
+    * behind `read`, `readWithIndex` and `format("graft")`. Opening is
+    * metadata-only: one manifest parse (format, schema, file stats) and one
+    * directory listing, no Spark job. Only a v1/v2 manifest, which records
+    * no schema, falls back to inferring it from the files. */
+  def relation(spark: SparkSession, dir: String): HadoopFsRelation = {
+    val m = Segments.openManifest(dir)
+    val fileFormat = m.format match {
       case "orc" => new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
       case _ => new ParquetFileFormat
     }
-    val schema = spark.read.format(fmt).load(dir).schema
-    val index = new ManifestFileIndex(spark, dir)
-    val relation = HadoopFsRelation(
-      location = index,
+    HadoopFsRelation(
+      location = new ManifestFileIndex(spark, dir, m),
       partitionSchema = StructType(Nil),
-      dataSchema = schema,
+      dataSchema = m.schema.getOrElse(spark.read.format(m.format).load(dir).schema),
       bucketSpec = None,
       fileFormat = fileFormat,
       options = Map.empty)(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
-    (Bridge.ofRows(spark, LogicalRelation(relation, isStreaming = false)), index)
   }
 }

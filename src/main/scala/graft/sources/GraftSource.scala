@@ -1,22 +1,19 @@
 package graft.sources
 
 import org.apache.spark.sql.SQLContext
-import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, RelationProvider}
-import org.apache.spark.sql.types.StructType
 
 import graft.plans.ManifestFileIndex
-import graft.storage.Segments
 
 /** `spark.read.format("graft").load(segmentDir)` — the named-format entry
   * the reference exposes as `format("indexr")` (SURVEY.md §3.2,
-  * indexr-spark IndexRFileFormat registration). Resolves to the same
-  * manifest-backed relation as `ManifestFileIndex.read`: per-file min/max +
-  * bloom + trigram pruning happens inside Catalyst file listing, then the
-  * native parquet/orc reader takes over (column pruning, row-group stats,
-  * row-group blooms). Registered via META-INF/services, so pure-SQL
-  * sessions reach it with nothing but the format name — e.g.
+  * indexr-spark IndexRFileFormat registration). Uses the same builder as
+  * `ManifestFileIndex.read` ([[ManifestFileIndex.relation]]): opening reads
+  * the manifest once and lists the directory once, with no Spark job;
+  * per-file min/max + bloom + trigram pruning happens inside Catalyst file
+  * listing, then the native parquet/orc reader takes over (column pruning,
+  * row-group stats, row-group blooms). Registered via META-INF/services, so
+  * pure-SQL sessions reach it with nothing but the format name — e.g.
   * `CREATE TABLE t USING graft LOCATION '/data/t'`. */
 class GraftSource extends RelationProvider with DataSourceRegister {
   override def shortName(): String = "graft"
@@ -25,20 +22,6 @@ class GraftSource extends RelationProvider with DataSourceRegister {
       parameters: Map[String, String]): BaseRelation = {
     val dir = parameters.getOrElse("path",
       throw new IllegalArgumentException("format(\"graft\") needs a path"))
-    val spark = ctx.sparkSession
-    val fmt = Segments.manifestFormat(dir)
-    val fileFormat = fmt match {
-      case "orc" => new org.apache.spark.sql.execution.datasources.orc.OrcFileFormat
-      case _ => new ParquetFileFormat
-    }
-    val schema = spark.read.format(fmt).load(dir).schema
-    HadoopFsRelation(
-      location = new ManifestFileIndex(spark, dir),
-      partitionSchema = StructType(Nil),
-      dataSchema = schema,
-      bucketSpec = None,
-      fileFormat = fileFormat,
-      options = Map.empty)(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
+    ManifestFileIndex.relation(ctx.sparkSession, dir)
   }
 }

@@ -9,7 +9,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * four constructs (sql/IndexRQL.java:266-300, RQL.g4:111-114):
   *   - `SELECT TOP n …`            → `… LIMIT n`
   *   - `LIMIT offset, n`           → `LIMIT n OFFSET offset`
-  *   - `CONVERT(expr, type)`       → `CAST(expr AS type)`
+  *   - `CONVERT(expr, type)`       → `CAST(expr AS type)` (type may be
+  *     parameterized: `DECIMAL(18,2)`, `VARCHAR(10)`)
   *   - `ONE(expr)` (identity fn)   → `(expr)`
   * Everything else RQL accepts (scan/filter/group/having/order/limit, the
   * AVG/COUNT/MAX/MIN/SUM/IF/CAST function set) is valid Spark SQL already.
@@ -82,7 +83,9 @@ object Rql {
 
   private val TopRe = "(?i)\\bSELECT\\s+TOP\\s+(\\d+)\\s+".r
   private val LimitOffRe = "(?i)\\bLIMIT\\s+(\\d+)\\s*,\\s*(\\d+)".r
-  private val ConvertRe = "(?i)\\bCONVERT\\s*\\(([^(),]+(?:\\([^()]*\\)[^(),]*)*),\\s*(\\w+)\\s*\\)".r
+  // the target type may carry a precision/length: DECIMAL(18,2), VARCHAR(10)
+  private val ConvertRe = ("(?i)\\bCONVERT\\s*\\(([^(),]+(?:\\([^()]*\\)[^(),]*)*),\\s*" +
+    "(\\w+(?:\\s*\\(\\s*\\d+\\s*(?:,\\s*\\d+\\s*)?\\))?)\\s*\\)").r
   private val OneRe = "(?i)\\bONE\\s*\\(".r
 
   private def rewrite(code: String): String = {

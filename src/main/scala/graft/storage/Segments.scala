@@ -3,6 +3,7 @@ package graft.storage
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Segment-layout storage: dim-sorted parquet + a per-file min/max manifest.
   *
@@ -27,8 +28,11 @@ object Segments {
   val ManifestFile = "_graft_manifest.json"
 
   /** Manifest format version. v2 distinguishes absent stats (JSON null) from
-    * the literal string "null"; v1 (version-less) manifests conflated them. */
-  val ManifestVersion = 2
+    * the literal string "null"; v1 (version-less) manifests conflated them.
+    * v3 adds the table's data schema, so a table opens from the manifest
+    * alone — the reference's InfoSegment carries its schema the same way
+    * (InfoSegment.java:10-43). */
+  val ManifestVersion = 3
 
   /** Unsigned UTF-8 byte-wise compare — the order Spark's UTF8String min/max
     * used when the stats were computed. JVM String.compareTo (UTF-16 code
@@ -287,7 +291,8 @@ object Segments {
       s"""{"file":${jq(file)},"rows":${r.getAs[Long]("__rows")},"stats":{${statCols.mkString(",")}}$bloomPart$ngramPart}"""
     }.mkString("[", ",", "]")
     writeTextFile(s"$dir/$ManifestFile",
-      s"""{"version":$ManifestVersion,"format":${jq(format)},"files":$entries}""")
+      s"""{"version":$ManifestVersion,"format":${jq(format)},""" +
+        s""""schema":${df.schema.json},"files":$entries}""")
   }
 
   // Manifest IO goes through the Hadoop FileSystem API, not java.nio: the
@@ -322,16 +327,13 @@ object Segments {
       blooms: Map[String, String] = Map.empty,
       ngrams: Map[String, String] = Map.empty)
 
-  /** The storage format recorded in the manifest ("parquet" or "orc"). */
-  def manifestFormat(dir: String): String = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    implicit val fmt: Formats = DefaultFormats
-    val j = JsonMethods.parse(readTextFile(s"$dir/$ManifestFile"))
-    (j \ "format").extractOpt[String].getOrElse("parquet")
-  }
+  /** One parse of a table's manifest: its storage format ("parquet" or
+    * "orc"), its data schema (None for v1/v2 manifests, written before the
+    * schema was recorded) and its per-file stats. */
+  case class TableManifest(format: String, schema: Option[StructType],
+      files: Seq[FileStats])
 
-  def readManifest(dir: String): Seq[FileStats] = {
+  def openManifest(dir: String): TableManifest = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     implicit val fmt: Formats = DefaultFormats
@@ -342,7 +344,7 @@ object Segments {
     // is then never pruned on that column) rather than risk wrong pruning.
     def bound(v: JValue): Option[String] =
       v.extractOpt[String].filterNot(s => version < 2 && s == "null")
-    (j \ "files").children.map { f =>
+    val files = (j \ "files").children.map { f =>
       FileStats(
         (f \ "file").extract[String],
         (f \ "rows").extract[Long],
@@ -358,7 +360,17 @@ object Segments {
           case _ => Map.empty[String, String]
         })
     }
+    val schema = (j \ "schema") match {
+      case o: JObject => Some(DataType.fromJson(JsonMethods.compact(o)).asInstanceOf[StructType])
+      case _ => None
+    }
+    TableManifest((j \ "format").extractOpt[String].getOrElse("parquet"), schema, files)
   }
+
+  /** The storage format recorded in the manifest ("parquet" or "orc"). */
+  def manifestFormat(dir: String): String = openManifest(dir).format
+
+  def readManifest(dir: String): Seq[FileStats] = openManifest(dir).files
 
   /** A per-file rough check, RSValue-style: may this file contain matches?
     * Implementations must be conservative — when stats are missing (unindexed
@@ -452,11 +464,12 @@ object Segments {
   /** Read only the files whose manifest interval intersects all ranges —
     * segment-level pruning before Parquet sees a footer. */
   def prunedRead(spark: SparkSession, dir: String, ranges: Seq[FilePred]): DataFrame = {
-    val manifest = readManifest(dir)
-    val fmt = manifestFormat(dir)
-    val keep = manifest.filter(fs => ranges.forall(_.mayMatch(fs))).map(_.file)
-    if (keep.isEmpty) spark.read.format(fmt).load(dir).limit(0)
-    else spark.read.format(fmt).load(keep: _*)
+    val m = openManifest(dir)
+    val keep = m.files.filter(fs => ranges.forall(_.mayMatch(fs))).map(_.file)
+    // a recorded schema spares the reader its footer-reading inference job
+    val reader = m.schema.fold(spark.read)(spark.read.schema(_)).format(m.format)
+    if (keep.isEmpty) reader.load(dir).limit(0)
+    else reader.load(keep: _*)
   }
 
   /** How many files the manifest would keep (for tests/introspection). */

@@ -529,4 +529,112 @@ class ModelStorageSpec extends AnyFunSuite {
         .stripMargin.replace("\n", ""))
     assert(Segments.readManifest(dir).head.stats("s") == (Some("null"), Some("null")))
   }
+
+  /** Spark jobs started on this thread while `body` runs. A fence job run
+    * after it flushes the listener bus: once the listener has seen the
+    * fence start, every earlier job start has been delivered. */
+  private def jobsDuring(body: => Unit): Int = {
+    val key = "graft.spec.jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some("counted") => jobs.incrementAndGet()
+          case Some("fence") => fenced.countDown()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "counted")
+      try body finally sc.setLocalProperty(key, "fence")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "fence job never reached the listener")
+      jobs.get()
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("opening a segment table runs zero Spark jobs (manifest-only open)") {
+    import graft.plans.ManifestFileIndex
+    val dir = Files.createTempDirectory("graft-open").toString + "/li"
+    Segments.write(Tables.lineitem(spark, sf), dir, sortCols = Seq("l_orderkey"),
+      indexedCols = Seq("l_orderkey"), numSegments = 8)
+    assert(jobsDuring(spark.read.format("graft").load(dir)) == 0,
+      "format(\"graft\").load ran a Spark job")
+    assert(jobsDuring(spark.sql("CREATE OR REPLACE TEMPORARY VIEW graft_open_li " +
+      s"USING graft OPTIONS (path '$dir')")) == 0,
+      "CREATE TEMPORARY VIEW ... USING graft ran a Spark job")
+    assert(jobsDuring(ManifestFileIndex.readWithIndex(spark, dir)) == 0,
+      "ManifestFileIndex.readWithIndex ran a Spark job")
+    // the counter does see jobs: a plain read infers its schema with one
+    assert(jobsDuring(spark.read.parquet(dir)) > 0)
+    spark.catalog.dropTempView("graft_open_li")
+  }
+
+  /** The schema the manifest records must be the one Spark infers. */
+  private def assertManifestSchema(dir: String): Unit = {
+    val m = Segments.openManifest(dir)
+    assert(m.schema.contains(spark.read.format(m.format).load(dir).schema),
+      s"$dir: manifest schema ${m.schema} differs from the inferred one")
+  }
+
+  test("the manifest records the data schema of every segment writer") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-schema-fid").toString
+    val li = Tables.lineitem(spark, sf)
+    for (fmt <- Seq("parquet", "orc")) {
+      Segments.write(li, s"$root/li-$fmt", sortCols = Seq("l_orderkey"),
+        indexedCols = Seq("l_orderkey"), numSegments = 4, format = fmt)
+      assertManifestSchema(s"$root/li-$fmt")
+    }
+    Segments.writeZOrdered(li, s"$root/z", zCols = Seq("l_orderkey", "l_partkey"),
+      numSegments = 4)
+    assertManifestSchema(s"$root/z")
+    // events.ts is a TIMESTAMP(NANOS) column read as a long in this session
+    Segments.write(Tables.events(spark, sf), s"$root/ev", sortCols = Seq("ts"),
+      indexedCols = Seq("ts"), numSegments = 4)
+    assertManifestSchema(s"$root/ev")
+    // a realtime compaction generation
+    import graft.streaming.Realtime
+    val rt = s"$root/rt"
+    val r = Realtime.RollupSpec(Seq("dim"), Seq("v" -> Realtime.Sum), "ev_id")
+    Seq(0, 1).foreach { b =>
+      Seq((b * 10L, "a", 1.5), (b * 10L + 1, "b", 2.0)).toDF("ev_id", "dim", "v")
+        .transform(Realtime.rollupBatch(_, r)).write.parquet(s"$rt/batch=$b")
+    }
+    assertManifestSchema(Realtime.compact(spark, rt, r, indexedCols = Seq("dim")))
+  }
+
+  test("a v2 manifest without a schema still opens through schema inference") {
+    import graft.plans.ManifestFileIndex
+    val dir = Files.createTempDirectory("graft-v2m").toString + "/li"
+    val li = Tables.lineitem(spark, sf)
+    Segments.write(li, dir, sortCols = Seq("l_orderkey"),
+      indexedCols = Seq("l_orderkey"), numSegments = 4)
+    // rewrite the manifest as v2 wrote it: no schema field (through the
+    // Hadoop FS, which keeps the manifest's checksum file in step)
+    val path = s"$dir/${Segments.ManifestFile}"
+    val v3 = Segments.readTextFile(path)
+    val schemaAt = v3.indexOf(""""schema":""")
+    val filesAt = v3.indexOf(""""files":""")
+    assert(schemaAt > 0 && filesAt > schemaAt)
+    Segments.writeTextFile(path, v3.substring(0, schemaAt).replace(
+      s""""version":${Segments.ManifestVersion}""", """"version":2""") +
+      v3.substring(filesAt))
+    assert(Segments.openManifest(dir).schema.isEmpty)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("l_orderkey") <= 100L).collect().map(_.toString).sorted.toSeq
+    val want = rows(li)
+    assert(rows(ManifestFileIndex.read(spark, dir)) == want)
+    assert(rows(spark.read.format("graft").load(dir)) == want)
+    assert(rows(Segments.prunedRead(spark, dir,
+      Seq(Segments.Range("l_orderkey", None, Some("100"))))) == want)
+  }
 }

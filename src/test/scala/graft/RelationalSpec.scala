@@ -35,6 +35,19 @@ class RelationalSpec extends AnyFunSuite {
     }
   }
 
+  test("registerViewOnce re-registers a view dropped from the session catalog") {
+    val q256 = SparkEntry.queries("q256_spans_pure_sql")
+    val first = q256(spark, sf) // registers graft_documents
+    assert(spark.catalog.tableExists("graft_documents"))
+    spark.catalog.dropTempView("graft_documents")
+    // the memo still records the registration; the next query must not
+    // trust it over the catalog (spark.sql analyzes eagerly, so a missing
+    // view would fail right here)
+    val again = q256(spark, sf)
+    assert(spark.catalog.tableExists("graft_documents"))
+    assert(again.count() == first.count())
+  }
+
   test("q03 aggregates match a hand-computed slice") {
     import org.apache.spark.sql.functions._
     val df = operators.Relational.q03(spark, sf)

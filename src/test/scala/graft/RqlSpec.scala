@@ -57,4 +57,19 @@ class RqlSpec extends AnyFunSuite {
         |FROM lineitem GROUP BY IF(l_quantity > 25, 'big', 'small')""".stripMargin)
     assert(r4.count() == 2)
   }
+
+  test("CONVERT accepts parameterized types: DECIMAL(p,s), VARCHAR(n)") {
+    assert(Rql.translate("SELECT CONVERT(a, DECIMAL(18,2)) FROM t")
+      == "SELECT CAST(a AS DECIMAL(18,2)) FROM t")
+    assert(Rql.translate("SELECT CONVERT(round(a, 1), decimal( 18 , 2 )) FROM t")
+      == "SELECT CAST(round(a, 1) AS decimal( 18 , 2 )) FROM t")
+    assert(Rql.translate("SELECT CONVERT(a, VARCHAR(10)) FROM t")
+      == "SELECT CAST(a AS VARCHAR(10)) FROM t")
+    Tables.register(spark, sf)
+    val r = Rql.sql(spark,
+      """SELECT CONVERT(l_extendedprice, DECIMAL(18,2)) AS p,
+        | CONVERT(l_orderkey, VARCHAR(10)) AS k FROM lineitem LIMIT 3""".stripMargin)
+    assert(r.schema("p").dataType == org.apache.spark.sql.types.DecimalType(18, 2))
+    assert(r.collect().length == 3)
+  }
 }
